@@ -79,6 +79,14 @@ object Checkpoints {
     * recompute. Lazy is only handed out for the localCheckpoint path
     * (persist-backed); reliable checkpoints (`dirKey` set) would
     * RECOMPUTE each round to write files, so `lazyCutOk` is false there.
+    *
+    * The AQE toggle is session-global, not scoped to the loop's frames:
+    * any query planned on the same session while the scope is open plans
+    * without AQE, and overlapping scopes can restore a stale value. The
+    * engine itself runs queries concurrently on one session —
+    * [[graft.etl.ZoloPipeline.loadWarehouse]] lands its tables from a
+    * thread pool — so a quiet loop must never overlap a warehouse load
+    * (or any other concurrent work) on the same session.
     */
   def quietLoop[T](s: org.apache.spark.sql.SparkSession)(body: Boolean => T): T = {
     val lazyCutOk = s.conf.getOption(dirKey).isEmpty

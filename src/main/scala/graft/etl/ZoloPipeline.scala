@@ -4,8 +4,8 @@ import graft.analytics.WeeklyDemand
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** End-to-end zolo flow on the bundled fixtures (FIXTURES.md §1–2):
-  * the reference's whole warehouse — 4 ETLs → 8 tables → the weekly-demand
-  * query — as one lazy-plan pipeline.
+  * the reference's whole warehouse — 4 ETLs plus two reference CSVs → 9
+  * tables → the weekly-demand query — as one lazy-plan pipeline.
   *
   * Round 2: every query here is ALSO hash-gated by a DuckDB oracle that
   * re-reads the SAME fixture JSON independently (`read_json` with pinned
@@ -20,7 +20,7 @@ object ZoloPipeline {
 
   val fixturesDir = "/root/repo/fixtures"
 
-  /** Register all 8 warehouse tables as temp views from the fixture data.
+  /** Register all 9 warehouse tables as temp views from the fixture data.
     * Idempotent per session — repeated driver queries skip re-planning the
     * whole ETL fixture read.
     */
@@ -64,7 +64,7 @@ object ZoloPipeline {
   }
 
   /** The reference pipeline END-TO-END through the warehouse connector:
-    * [[loadWarehouse]] lands all 8 tables via the DSv2 WRITE face, then
+    * [[loadWarehouse]] lands all 9 tables via the DSv2 WRITE face, then
     * the verbatim weekly-demand SQL runs with every table reference
     * resolved through the catalog READ face (facts under `raw.`, dims
     * under `ref.` — qualified in place with a word-boundary rewrite), so
@@ -202,6 +202,17 @@ object ZoloPipeline {
     * (`qb_customers_ETL.py:190`) as a `createOrReplace`. The query half
     * ([[registerAll]]) stays view-based — loads write bytes, queries
     * don't, so the driver's zolo_* hashes are untouched by this path.
+    *
+    * The nine tables are independent, so they land concurrently in two
+    * phases (each a handful of small jobs that would otherwise leave the
+    * cores idle between them): first the three keyed headers, then the
+    * three details and the three replaced dimensions. Phase 2 starts only
+    * once every header has landed, so a failed header write lands no
+    * detail or dimension rows; headers of the same phase may already have
+    * landed, and a replay of the window dedups them on key. The failure
+    * surfaces as the write's own exception. Each table's
+    * `tableExists` → `create`/`append` sequence runs on one thread, so
+    * every table still has a single writer ([[Warehouse.appendDedup]]).
     */
   def loadWarehouse(spark: SparkSession, root: String, dir: String = fixturesDir,
       ephemeral: Boolean = false): Unit = {
@@ -229,19 +240,51 @@ object ZoloPipeline {
       if (spark.catalog.tableExists(s"$cat.raw.$table")) w.append()
       else w.create()
     }
-    appendKeyed(sqTrans, "square_trans", "payment_id")
-    appendKeyed(shTrans, "shopify_trans", "order_id")
-    appendKeyed(qbTrans, "qb_trans", "payment_id") // DocNumber lands as payment_id (QuickbooksEtl)
-    appendDetails(sqDetails, "square_trans_details")
-    appendDetails(shDetails, "shopify_trans_details")
-    appendDetails(qbDetails, "qb_trans_details")
-    // the reference REPLACES the customer dim on every run
-    QbCustomersEtl.run(spark, s"$dir/qb_customers.json")
-      .writeTo(s"$cat.raw.qb_customers").createOrReplace()
-    Warehouse.readItems(spark, s"$dir/items.csv")
-      .writeTo(s"$cat.ref.items").createOrReplace()
-    Warehouse.readCoffeeProfiles(spark, s"$dir/coffee_profiles.csv")
-      .writeTo(s"$cat.ref.coffee_profiles").createOrReplace()
+    concurrently(spark)(
+      () => appendKeyed(sqTrans, "square_trans", "payment_id"),
+      () => appendKeyed(shTrans, "shopify_trans", "order_id"),
+      () => appendKeyed(qbTrans, "qb_trans", "payment_id") // DocNumber lands as payment_id (QuickbooksEtl)
+    )
+    concurrently(spark)(
+      () => appendDetails(sqDetails, "square_trans_details"),
+      () => appendDetails(shDetails, "shopify_trans_details"),
+      () => appendDetails(qbDetails, "qb_trans_details"),
+      // the reference REPLACES the customer dim on every run
+      () => QbCustomersEtl.run(spark, s"$dir/qb_customers.json")
+        .writeTo(s"$cat.raw.qb_customers").createOrReplace(),
+      () => Warehouse.readItems(spark, s"$dir/items.csv")
+        .writeTo(s"$cat.ref.items").createOrReplace(),
+      () => Warehouse.readCoffeeProfiles(spark, s"$dir/coffee_profiles.csv")
+        .writeTo(s"$cat.ref.coffee_profiles").createOrReplace()
+    )
+  }
+
+  /** Runs `writes` on a pool of their own and returns once all of them
+    * have finished; if any failed, rethrows the first failure (in argument
+    * order) as itself, the others attached as suppressed. The pool lives
+    * for this call only: its threads are created from the calling thread,
+    * so they inherit its Spark local properties (job group, description,
+    * scheduler pool, tags) — a shared pool's threads would carry whatever
+    * was set when they were created.
+    */
+  private def concurrently(spark: SparkSession)(writes: (() => Unit)*): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writes.size)
+    try {
+      val pending = writes.map { w =>
+        pool.submit(new Runnable {
+          // WarehouseCatalog resolves SparkSession.active
+          def run(): Unit = { SparkSession.setActiveSession(spark); w() }
+        })
+      }
+      val failures = pending.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
   }
 
   /** Resolve a catalog NAME for the requested warehouse root. Spark

@@ -1,7 +1,9 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.etl.{SquareEtl, ZoloPipeline}
+import graft.etl.{QbCustomersEtl, QuickbooksEtl, ShopifyEtl, SquareEtl, Warehouse, ZoloPipeline}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 
 import java.nio.file.Files
 
@@ -173,21 +175,82 @@ class WarehouseDsv2Spec extends SparkSpec {
       spark.read.parquet(s"$rootB/raw/square_trans").collect().toSet)
   }
 
+  /** Every table a load lands, with the ETL output it must hold. */
+  private def etlOutputs(): Map[String, DataFrame] = {
+    val dir                  = ZoloPipeline.fixturesDir
+    val (sqTrans, sqDetails) = SquareEtl.run(spark, s"$dir/square_payments.json")
+    val (shTrans, shDetails) = ShopifyEtl.run(spark, s"$dir/shopify_orders.json")
+    val (qbTrans, qbDetails) = QuickbooksEtl.run(spark, s"$dir/qb_invoices.json")
+    Map(
+      "raw/square_trans"          -> sqTrans,
+      "raw/square_trans_details"  -> sqDetails,
+      "raw/shopify_trans"         -> shTrans,
+      "raw/shopify_trans_details" -> shDetails,
+      "raw/qb_trans"              -> qbTrans,
+      "raw/qb_trans_details"      -> qbDetails,
+      "raw/qb_customers"          -> QbCustomersEtl.run(spark, s"$dir/qb_customers.json"),
+      "ref/items"                 -> Warehouse.readItems(spark, s"$dir/items.csv"),
+      "ref/coffee_profiles"       -> Warehouse.readCoffeeProfiles(spark, s"$dir/coffee_profiles.csv"))
+  }
+
+  /** Rows with their multiplicities, so duplicated rows count. */
+  private def rowBag(df: DataFrame): Map[Row, Int] =
+    df.collect().groupBy(identity).view.mapValues(_.length).toMap
+
   test("zolo load end-to-end through writeTo: replay-safe facts, replaced dim, bytes match the ETL") {
-    val root = tmp("zolo-load")
+    val root     = tmp("zolo-load")
+    val expected = etlOutputs()
     ZoloPipeline.loadWarehouse(spark, root)
-    val first = spark.read.parquet(s"$root/raw/square_trans").collect().toSet
-    // the reference pipeline re-runs daily; a replay must not duplicate facts
+    // what landed through the DSv2 face is exactly the ETL output, table
+    // by table — a write that lands under another table's path fails here
+    val landed = expected.keys.map(t => t -> rowBag(spark.read.parquet(s"$root/$t"))).toMap
+    expected.foreach { case (t, df) =>
+      assert(landed(t).nonEmpty, s"$t landed no rows")
+      assert(landed(t) == rowBag(df), s"$t differs from its ETL output")
+    }
+    // the reference pipeline re-runs daily; a replay must not duplicate
+    // facts, and replaces (not accumulates) the dims
     ZoloPipeline.loadWarehouse(spark, root)
-    val after = spark.read.parquet(s"$root/raw/square_trans").collect().toSet
-    assert(after == first, "replayed load duplicated fact rows")
-    // what landed through the DSv2 face is exactly the ETL output
-    val (sqTrans, _) = SquareEtl.run(spark, s"${ZoloPipeline.fixturesDir}/square_payments.json")
-    assert(first == sqTrans.collect().toSet)
-    // dim present and replaced (one copy)
-    assert(spark.read.parquet(s"$root/raw/qb_customers").count() ==
-      graft.etl.QbCustomersEtl.run(spark, s"${ZoloPipeline.fixturesDir}/qb_customers.json").count())
-    assert(spark.read.parquet(s"$root/ref/items").count() > 0)
+    for (t <- Seq("raw/square_trans", "raw/shopify_trans", "raw/qb_trans",
+        "raw/qb_customers", "ref/items", "ref/coffee_profiles"))
+      assert(rowBag(spark.read.parquet(s"$root/$t")) == landed(t), s"replayed load changed $t")
+  }
+
+  test("failed header write: the write's own exception, no details or dims landed, next load fine") {
+    val root = tmp("zolo-load-fail")
+    // an existing shopify_trans whose schema the ETL output cannot append to
+    Seq(1).toDF("unrelated").write.parquet(s"$root/raw/shopify_trans")
+    // the write's own exception, not the pool's ExecutionException wrapper
+    intercept[AnalysisException](ZoloPipeline.loadWarehouse(spark, root))
+    val landed = for {
+      ns <- Seq("raw", "ref")
+      f  <- Option(new java.io.File(s"$root/$ns").listFiles()).toSeq.flatten
+    } yield s"$ns/${f.getName}"
+    assert(!landed.exists(t => t.endsWith("_details") || t.startsWith("ref/") || t == "raw/qb_customers"),
+      s"phase-2 tables landed after a failed header write: ${landed.mkString(", ")}")
+    val fresh = tmp("zolo-load-after-fail")
+    ZoloPipeline.loadWarehouse(spark, fresh)
+    assert(etlOutputs().keys.forall(t => spark.read.parquet(s"$fresh/$t").count() > 0))
+  }
+
+  test("every job a load starts carries the caller's job group") {
+    val root   = tmp("zolo-load-group")
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup("zolo-load-group", "warehouse load", interruptOnCancel = false)
+    try ZoloPipeline.loadWarehouse(spark, root)
+    finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.GraftBusDrain.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val seen = groups.toArray.toSeq
+    assert(seen.nonEmpty, "the load started no jobs")
+    assert(seen.forall(_ == "zolo-load-group"), s"jobs outside the caller's group: ${seen.distinct}")
   }
 
   test("model write-back round trip: model_meta / model_holt / model_simp_avg land and read back") {
